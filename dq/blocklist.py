@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dq.io import local_frame
+
 # ---- shared constants (dq.oracles generates SQL from these) ----------------
 
 # (category, is_hard, terms) — lowercase single tokens under TOKEN_RE
@@ -69,9 +71,7 @@ def blocklist_frame(spark: SparkSession) -> DataFrame:
         for cat, hard, terms in BLOCKLIST
         for term in terms
     ]
-    return spark.createDataFrame(
-        rows, "term string, category string, is_hard boolean"
-    )
+    return local_frame(spark, rows, "term string, category string, is_hard boolean")
 
 
 def planted_text(did: Column, text: Column) -> Column:

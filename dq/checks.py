@@ -46,6 +46,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dq.io import local_frame
+
 
 @dataclass(frozen=True)
 class Check:
@@ -108,8 +110,8 @@ def run_checks(
             F.expr(f"stack({len(cells)}, {stack}) AS (constraint, n_violations)"),
         ).select("constraint", "n_rows", "n_violations")
     else:  # fk-only suite: stack(0, ...) does not parse — start empty
-        report = df.sparkSession.createDataFrame(
-            [], "constraint string, n_rows bigint, n_violations bigint"
+        report = local_frame(
+            df.sparkSession, [], "constraint string, n_rows bigint, n_violations bigint"
         )
 
     for c in checks:

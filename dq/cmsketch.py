@@ -28,7 +28,7 @@ because 0*31 + c1 = c1 (the classifier-tier identity, gate-proven).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dq.classifier import POLY_MOD, token_hash
@@ -40,14 +40,6 @@ CM_W = 512                    # counters per row
 # style family; d = len(CM_SALTS)
 CM_SALTS = [(1, 0), (1103515245, 12345), (69069, 362437), (214013, 2531011)]
 CM_PROBE_MIN_CNT = 50         # probe tokens: exact count at/above this
-
-
-def cm_position_cols(h: Column) -> list[Column]:
-    """The d row positions for a (already poly-hashed) token value."""
-    return [
-        (((h * F.lit(a) + F.lit(b)) % POLY_MOD) % CM_W).alias(f"_p{r}")
-        for r, (a, b) in enumerate(CM_SALTS)
-    ]
 
 
 def cm_sketch(tokens: DataFrame, token_col: str = "w") -> DataFrame:

@@ -157,9 +157,13 @@ def ks_drift(old: DataFrame, new: DataFrame, value_col: str = "n_chars") -> Data
     Exactness without floats: D = max_v |Fa(v)/na - Fb(v)/nb| is compared
     via the cross-multiplied integer |Fa(v)*nb - Fb(v)*na| (the
     token_drift_topk discipline); the reported ks_ppm is one final DIV of
-    exact integers. Products stay in int64 while na*nb < 2^63 (~3e9 rows
-    per side) — past that, run KS on a fixed-rate sample per side or lift
-    the three products to decimal(38,0); the gate corpus is nowhere near.
+    exact integers. Headroom: ks_num <= na*nb, but ks_ppm multiplies it
+    by 1e6 before the DIV, so int64 holds only while na*nb*1e6 < 2^63,
+    i.e. na*nb < 9.22e12 — about 3.0e6 rows per side (sqrt(9.22e12)) for
+    balanced snapshots. The cross products themselves (ks_num) last to
+    na*nb < 2^63 (~3e9 per side). Past ~3e6 rows per side non-ANSI Spark
+    wraps ks_ppm silently and DuckDB raises; run KS on a fixed-rate sample
+    per side until the numerator moves to decimal(38,0).
 
     Scale shape: each corpus reduces to value-grouped counts (one map-side
     combinable hash-agg each, value never the row); the cumulative window
@@ -223,8 +227,13 @@ def rank_sum_drift(old: DataFrame, new: DataFrame, value_col: str = "n_chars") -
     midrank 2S + c + 1, and u2 = 2U stays integral: u2_old =
     Σ c_old(v)·m2(v) − n_old·(n_old+1). The invariant
     u2_old + u2_new == 2·n_old·n_new is pytest-pinned. Same scale shape
-    as ks_drift: per-value count aggs, one value-domain-bounded window,
-    int64 headroom to ~2e9 rows/side (Σ c·m2 <= 2N²).
+    as ks_drift: per-value count aggs, one value-domain-bounded window.
+    Headroom: u2_old <= 2*na*nb, and cles_ppm multiplies it by 1e6 before
+    the DIV, so int64 holds only while 2*na*nb*1e6 < 2^63, i.e. na*nb <
+    4.61e12 — about 2.1e6 rows per side (sqrt(4.61e12)) for balanced
+    snapshots. u2 itself (Σ c·m2 <= 2N²) lasts to ~2e9 per side. Past
+    ~2e6 rows per side non-ANSI Spark wraps cles_ppm silently and DuckDB
+    raises.
     """
     from pyspark.sql import Window
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dq.io import local_frame
 from dq.schema import DQ_DUPLICADOS
 
 CONSOLIDATE_KEYS = ["banco", "tabela", "dt_foto", "dt_processamento"]
@@ -127,4 +128,4 @@ def consolidate(history: DataFrame, aux: DataFrame, keys: list[str] | None = Non
 
 
 def empty_history(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=DQ_DUPLICADOS)
+    return local_frame(spark, [], DQ_DUPLICADOS)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dq.dedup import LSH_BUCKET_MAX_DOCS, _drop_hot_buckets
+from dq.io import local_frame
 
 DHASH_W = 9  # resample width (8 horizontal gradients per row)
 DHASH_H = 8
@@ -187,9 +188,10 @@ def synth_images_neardup(spark: SparkSession, n: int = 48, seed: int = 11) -> Da
                 (n + i, f"https://img.example.com/edit/{i}",
                  bytearray(codecs.encode_png(var, filter_type=(i + 1) % 5)))
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
-        schema=T.StructType(
+        T.StructType(
             [
                 T.StructField("asset_id", T.LongType(), False),
                 T.StructField("url", T.StringType(), False),

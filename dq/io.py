@@ -56,17 +56,51 @@ def _recover_swap_debris(path: str) -> None:
         os.rename(final_tmp, path)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Small driver-side rows as a JVM ``LocalRelation`` — no Python worker.
+
+    ``spark.createDataFrame(<list>, schema)`` becomes ``parallelize`` plus a
+    Python ``map``: a PythonRDD whose tasks each boot or borrow a Python
+    worker, even for a one-row frame. Sent as one Arrow table the rows
+    instead go through ``PythonSQLUtils.toDataFrame`` into a
+    ``LocalRelation``, which every consumer reads in the JVM. ``schema`` is
+    a StructType or a DDL string; rows are positional tuples (``Row`` works).
+    A NULL in a non-nullable field or a value of the wrong type raises here,
+    as the list form's schema check did; naive datetimes are taken as UTC
+    (the list form read them in the process's local zone). For small
+    control-plane frames only (failure rows, fresh history rows, empty
+    first-run tables, constant dimensions): the rows travel through the
+    driver.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
 def read_path(spark: SparkSession, path: str, default_schema=None, fmt: str = "parquet") -> DataFrame:
-    """Read a parquet/orc path; absent path + default_schema -> empty frame
-    (first run of a history table). Restores interrupted-swap debris first:
-    a path missing because a previous overwrite crashed mid-swap must read
-    as the last committed copy, never as "first run"."""
+    """Read a parquet/orc path. With ``default_schema`` the read is
+    schema-on-read — no footer-inference job, columns the files lack read
+    as NULL — and an absent path is an empty local frame (first run of a
+    history table). Without it the schema is inferred from the files.
+    Restores interrupted-swap debris first: a path missing because a
+    previous overwrite crashed mid-swap must read as the last committed
+    copy, never as "first run"."""
     _recover_swap_debris(path)
     if not os.path.exists(path):
         if default_schema is not None:
-            return spark.createDataFrame([], schema=default_schema)
+            return local_frame(spark, [], default_schema)
         raise FileNotFoundError(path)
-    return spark.read.format(fmt).load(path)
+    reader = spark.read.format(fmt)
+    if default_schema is not None:
+        reader = reader.schema(default_schema)
+    return reader.load(path)
 
 
 def partition_values(df: DataFrame, partition_expr) -> DataFrame:
@@ -87,6 +121,13 @@ def partition_exists(df: DataFrame, partition_expr: str, value: str) -> bool:
     Catalyst turns into partition pruning (SURVEY.md §4.1 row 1).
     """
     return df.where(F.expr(partition_expr) == F.lit(value)).limit(1).count() > 0
+
+
+def partition_count(df: DataFrame, partition_expr: str, value: str) -> int:
+    """Rows in one partition: the gate and the measurement in one job
+    (0 ≙ absent). Same pruning predicate as :func:`partition_exists`; the
+    count is map-side partial, so no data row is shuffled."""
+    return df.where(F.expr(partition_expr) == F.lit(value)).count()
 
 
 def overwrite_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:

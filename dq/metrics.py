@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dq.io import local_frame
+
 
 def band_col(value: Column, edges: list[float], labels: list[str] | None = None) -> Column:
     """CASE-chain bucketizer (≙ the 12-band histogram VivoPlay.scala:173-186).
@@ -108,8 +110,8 @@ def benford_digits(values: DataFrame, cents_col: str = "cents") -> DataFrame:
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("_obs"))
     )
-    spine = spark.createDataFrame(
-        [(d + 1, m) for d, m in enumerate(BENFORD_MICRO)], "digit int, exp_micro long"
+    spine = local_frame(
+        spark, [(d + 1, m) for d, m in enumerate(BENFORD_MICRO)], "digit int, exp_micro long"
     )
     total = pos.agg(F.count(F.lit(1)).alias("_n"))
     return (

@@ -25,6 +25,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dq.io import local_frame
 from dq.schema import MEDIA_ASSETS
 
 FEATURE_DIM = 16
@@ -80,7 +81,7 @@ def synth_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
                 {"image": "png", "audio": "opus", "video": "av1"}[kind],
             )
         )
-    return spark.createDataFrame(rows, schema=MEDIA_ASSETS)
+    return local_frame(spark, rows, MEDIA_ASSETS)
 
 
 def synth_media_decodable(spark: SparkSession, n: int = 48, seed: int = 7) -> DataFrame:
@@ -158,7 +159,7 @@ def synth_media_decodable(spark: SparkSession, n: int = 48, seed: int = 7) -> Da
             (i, f"https://media.example.com/image/{i}", "image",
              bytearray(payload), w, h, None, kind)
         )
-    return spark.createDataFrame(rows, schema=MEDIA_ASSETS)
+    return local_frame(spark, rows, MEDIA_ASSETS)
 
 
 def image_feature(arr: np.ndarray) -> list[float]:

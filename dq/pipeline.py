@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from dq import heuristics
 from dq.extract import extract_text_col
-from dq.io import CheckpointManifest
+from dq.io import CheckpointManifest, local_frame
 from dq.langid import detect_lang_batch
 from dq.perplexity import perplexity_batch
 from dq.scrub import scrub_col
@@ -270,7 +270,8 @@ def enrich_sql_only(
 
 
 # read-back shape of the accumulated lineage directory (lineage_metrics
-# columns + the dt_foto partition column); used for the empty-input path
+# columns + the dt_foto partition column): the read schema, and the empty
+# frame of a first run with no input
 LINEAGE_SCHEMA_DDL = (
     "n_input bigint, n_kept bigint, n_dropped bigint, n_scrubbed bigint, "
     "n_exact_dups bigint, n_extraction_ok bigint, dt_processamento string, "
@@ -450,8 +451,13 @@ def run(
             .partitionBy(PARTITION_COL)
             .parquet(os.path.join(out_dir, "kept"))
         )
+        # one lineage row per pending partition: collect them once and write
+        # them back as a local frame — the rows also say which partitions
+        # kept any doc, so no second job over the persisted frame is needed
+        metrics = lineage_metrics(enriched)
+        rows = metrics.collect()
         (
-            lineage_metrics(enriched)
+            local_frame(spark, rows, metrics.schema)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(PARTITION_COL)
@@ -461,9 +467,7 @@ def run(
         # frame: a re-processed partition whose kept set became empty (e.g.
         # stricter config) would otherwise keep its stale files — delete it
         # explicitly, matching per-partition mode's whole-directory overwrite
-        kept_parts = {
-            r[0] for r in kept.select(PARTITION_COL).distinct().collect()
-        }
+        kept_parts = {r[PARTITION_COL] for r in rows if r["n_kept"]}
         import shutil
 
         for part in pending:
@@ -482,9 +486,9 @@ def run(
         enriched = enrich(scoped, config=config, dedup_scope=scope).where(
             F.col(PARTITION_COL).isin(pending)
         )
-        # one UDF pass, three actions (kept write, lineage write, empty-
-        # partition probe): without the persist each action re-runs the
-        # whole extract+langid+ppl+scrub plan — the dominant cost at scale
+        # one UDF pass, two actions (kept write, lineage collect): without
+        # the persist the second re-runs the whole extract+langid+ppl+scrub
+        # plan — the dominant cost at scale
         from pyspark import StorageLevel
 
         enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
@@ -529,11 +533,10 @@ def run(
         # empty input on a first run (a day with no crawl): nothing was
         # written — return an empty, correctly-typed lineage frame rather
         # than crashing on a missing path
-        return spark.createDataFrame([], LINEAGE_SCHEMA_DDL)
-    # partition-dir type inference would surface dt_foto as int; pin string
-    lineage = spark.read.parquet(lineage_dir).withColumn(
-        PARTITION_COL, F.col(PARTITION_COL).cast("string")
-    )
+        return local_frame(spark, [], LINEAGE_SCHEMA_DDL)
+    # schema-on-read: no footer-inference job, and dt_foto stays a string
+    # (partition-dir type inference would surface it as int)
+    lineage = spark.read.schema(LINEAGE_SCHEMA_DDL).parquet(lineage_dir)
     if lineage_table is not None and parts:
         from dq.io import merge_upsert, save_as_table, table_exists
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from dq import heuristics, metrics, textstats
 from dq.dedup import minhash_near_dups, simhash_near_dups
 from dq.dupcheck import dup_counts
+from dq.io import local_frame
 from dq.similarity import brute_force_topk_vectorized, embedding_near_dups
 
 # --- shared constants (oracles import these too) ---------------------------
@@ -190,7 +191,8 @@ def remediation_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Status flip semantics (C3/C5/P7): manifest rows outside the exclusion
     list get status 1 iff their partition now exists."""
     ev = _t(spark, sf_dir, "events")
-    manifest = spark.createDataFrame(
+    manifest = local_frame(
+        spark,
         REMEDIATION_MANIFEST,
         "banco string, tabela string, dt_foto string, var_nome_campo string, var_formato_dt_foto string",
     ).where(~F.col("tabela").isin(REMEDIATION_EXCLUDED))
@@ -240,7 +242,7 @@ def events_in_value_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dq.joins import range_join_small
 
     ev = _t(spark, sf_dir, "events")
-    ranges = spark.createDataFrame(VALUE_RANGES, "range_name string, lo double, hi double")
+    ranges = local_frame(spark, VALUE_RANGES, "range_name string, lo double, hi double")
     return range_join_small(ev, ranges, "value").groupBy("range_name").agg(
         F.count(F.lit(1)).cast("bigint").alias("qtde"),
         F.sum(_cents("value")).cast("bigint").alias("cents"),

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq import volumetry
-from dq.io import partition_exists
+from dq.io import local_frame, partition_count
 from dq.schema import DQ_FAILURES
 
 
@@ -79,12 +79,12 @@ def remediate_volumetria(
         .collect()  # control table only: O(#failures) rows
     ]
 
-    # accumulate every healed failure's fresh row and fixed flag, then do
-    # ONE merge + ONE flip: the old per-failure chaining stacked an
+    # accumulate every healed failure's measured count and fixed flag, then
+    # do ONE merge + ONE flip: the old per-failure chaining stacked an
     # anti-join + union + dropDuplicates PER manifest entry, so a 300-
     # failure backlog built a 300-deep lazy plan (the iterative-loop trap —
     # CLAUDE.md documents a 12-round uncheckpointed loop hanging >5 min)
-    fresh_rows: list[DataFrame] = []
+    counts: list[tuple] = []
     fixed: list[Failure] = []
     for f in manifest:
         try:
@@ -95,19 +95,16 @@ def remediate_volumetria(
             # of aborting the whole remediation run on one unmapped entry
             continue
         pexpr = partition_expr_for(f.var_nome_campo, f.var_formato_dt_foto)
-        if not partition_exists(monitored, pexpr, f.dt_foto):
-            continue  # hole still there; failure row stays open
-        fresh_rows.append(
-            volumetry.measure_row(monitored, f.banco, f.tabela, f.dt_foto, pexpr, fonte="3")
-        )
+        # one count job: the re-gate (0 ≙ hole still there) and the metric
+        n = partition_count(monitored, pexpr, f.dt_foto)
+        if n == 0:
+            continue  # failure row stays open
+        counts.append((f.banco, f.tabela, f.dt_foto, n, "3"))
         fixed.append(f)
 
     if not fixed:
         return history, failures
-    from functools import reduce
-
-    all_fresh = reduce(lambda a, b: a.unionByName(b), fresh_rows)
-    new_history = volumetry.merge_history(history, all_fresh)
+    new_history = volumetry.merge_history(history, volumetry.count_rows(spark, counts))
     new_failures = flip_status_all(spark, failures, fixed)
     return new_history, new_failures
 
@@ -126,19 +123,13 @@ def flip_status_all(
     """Status flip 0->1 for a BATCH of healed failures (≙ CorrigirBuraco.
     scala:172-215): one anti-join on (banco, tabela, dt_foto) + one union of
     the status=1 rows — plan depth is constant in the number of failures."""
-    fixed = spark.createDataFrame(
-        [
-            (f.banco, f.tabela, f.dt_foto, f.var_nome_campo, f.var_formato_dt_foto, 1)
-            for f in fs
-        ],
-        schema=DQ_FAILURES,
+    fixed = local_frame(
+        spark,
+        [(f.banco, f.tabela, f.dt_foto, f.var_nome_campo, f.var_formato_dt_foto, 1) for f in fs],
+        DQ_FAILURES,
     )
     keys = ["banco", "tabela", "dt_foto"]
     cond = [failures[k].eqNullSafe(fixed[k]) for k in keys]
     kept = failures.join(F.broadcast(fixed), cond, "left_anti")
     return kept.unionByName(fixed).dropDuplicates()
 
-
-def flip_status(spark: SparkSession, failures: DataFrame, f: Failure) -> DataFrame:
-    """Single-failure convenience wrapper over :func:`flip_status_all`."""
-    return flip_status_all(spark, failures, [f])

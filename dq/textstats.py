@@ -16,6 +16,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dq.io import local_frame
+
 # BPE-ish word/number/punct tokenizer (shared, dialect-portable regex).
 # \x0b listed alongside \s: Java's \s already contains vertical tab but
 # RE2's does NOT (probed, round 5) — the explicit member keeps the
@@ -548,8 +550,8 @@ def bpe_learn_merges(df, text_col: str = "text", rounds: int = BPE_MERGE_ROUNDS)
         vocab = vocab.select(
             _apply_merge("syms", l, r).alias("syms"), "freq"
         ).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "merge_rank int, left_sym string, right_sym string, pair_count bigint"
+    return local_frame(
+        spark, merges, "merge_rank int, left_sym string, right_sym string, pair_count bigint"
     )
 
 

@@ -34,6 +34,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dq.io import local_frame
+
 # ---- shared constants (dq.oracles generates SQL from these) ----------------
 
 HOT_DOMAIN = "news.hot-example.com"
@@ -184,9 +186,7 @@ def robots_rules_filter(base: DataFrame) -> DataFrame:
     exchange is the (doc_id, domain, path) hash-agg (~40 B/row — url
     strings only, never text)."""
     spark = base.sparkSession
-    rules = spark.createDataFrame(
-        ROBOTS_TXT_RULES, "r_domain string, prefix string, allow int"
-    )
+    rules = local_frame(spark, ROBOTS_TXT_RULES, "r_domain string, prefix string, allow int")
     u = base.select(
         "doc_id",
         domain_col().alias("domain"),

@@ -7,16 +7,20 @@ multi-column predicate (left_anti join), NOT a null-unsafe concat string
 (ColetaVolumetria.scala:100); the pre-write ORDER BY is dropped
 (non-semantic); read-then-overwrite is staged (Spark 3 legality).
 
-Scale: the measured count is a partition-pruned scan + partial (map-side)
-count — no shuffle of data rows; the history merge shuffles only the tiny
-history table; the anchor/fresh frames are 1 row and broadcast.
+Scale: one job per check — a partition-pruned scan + partial (map-side)
+count, no shuffle of data rows — is both the gate (0 rows ≙ absent) and
+the measurement. The fresh and failure rows are driver-side local frames
+(dq.io.local_frame: a JVM LocalRelation, no Python worker); the history
+merge broadcasts the fresh rows and never shuffles the history table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dq.io import local_frame, partition_count
 from dq.schema import DQ_FAILURES, DQ_VOLUMETRIA
 
 MERGE_KEYS = ["banco", "tabela", "dt_foto", "dt_processamento"]
@@ -26,35 +30,27 @@ def failure_row(
     spark: SparkSession, banco: str, tabela: str, dt_foto: str, campo: str, formato: str
 ) -> DataFrame:
     """Constant-projection failure row, status=0 (≙ ColetaVolumetria.scala:54-62)."""
-    return spark.createDataFrame(
-        [(banco, tabela, dt_foto, campo, formato, 0)], schema=DQ_FAILURES
-    )
+    return local_frame(spark, [(banco, tabela, dt_foto, campo, formato, 0)], DQ_FAILURES)
 
 
-def measure_row(
-    df: DataFrame,
-    banco: str,
-    tabela: str,
-    dt_foto: str,
-    partition_expr: str,
-    fonte: str = "2",
-) -> DataFrame:
-    """Labeled count(*) of one partition (≙ ColetaVolumetria.scala:77-94).
+# a history row as measured on the driver; dt_processamento is stamped in Spark
+_COUNTED = T.StructType([f for f in DQ_VOLUMETRIA.fields if f.name != "dt_processamento"])
 
-    ``partition_expr`` is the already-resolved (format-dispatched in Python)
-    partition expression, so the equality predicate prunes at the scan.
-    """
-    counted = (
-        df.where(F.expr(partition_expr) == F.lit(dt_foto))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("qtde_registros"))
-    )
-    return counted.select(
-        F.lit(banco).alias("banco"),
-        F.lit(tabela).alias("tabela"),
-        F.lit(dt_foto).alias("dt_foto"),
+
+def count_rows(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """History rows (DQ_VOLUMETRIA order) from already-measured counts
+    (≙ ColetaVolumetria.scala:77-94's labeled count row). ``rows`` are
+    ``(banco, tabela, dt_foto, qtde_registros, fonte)`` tuples, sent as
+    one local frame. ``dt_processamento`` stays a Spark
+    ``date_format(current_date())`` column, so the session time zone
+    decides the processing day."""
+    return local_frame(spark, rows, _COUNTED).select(
+        "banco",
+        "tabela",
+        "dt_foto",
         F.date_format(F.current_date(), "yyyyMMdd").alias("dt_processamento"),
-        F.col("qtde_registros"),
-        F.lit(fonte).alias("fonte"),
+        "qtde_registros",
+        "fonte",
     )
 
 
@@ -71,24 +67,6 @@ def merge_history(history: DataFrame, fresh: DataFrame, keys: list[str] | None =
     return kept.unionByName(fresh).dropDuplicates()
 
 
-def merge_history_table(
-    spark: SparkSession,
-    table: str,
-    fresh: DataFrame,
-    keys: list[str] | None = None,
-    partition_col: str = "dt_foto",
-) -> None:
-    """C2 when the history lives as a PARTITIONED CATALOG TABLE: same upsert
-    semantics as :func:`merge_history`, executed as a dynamic-partition
-    overwrite through dq.io.merge_upsert — only the partitions carrying
-    fresh rows are rewritten (≙ ColetaVolumetria.scala:97-123's
-    read-then-overwrite, staged for Spark 3 legality; Iceberg MERGE INTO in
-    prod)."""
-    from dq.io import merge_upsert
-
-    merge_upsert(spark, table, fresh, keys or MERGE_KEYS, partition_col)
-
-
 def collect_volumetria(
     spark: SparkSession,
     monitored: DataFrame,
@@ -101,17 +79,18 @@ def collect_volumetria(
     formato: str = "1",
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """Full ColetaVolumetria lifecycle. Returns (new_history, failure_row) —
-    exactly one is non-None (partition gate, C1)."""
-    from dq.io import partition_exists
-
-    if not partition_exists(monitored, partition_expr, dt_foto):
+    exactly one is non-None (partition gate, C1). ``partition_expr`` is the
+    already-resolved (format-dispatched in Python) partition expression, so
+    the equality predicate prunes at the scan; its one count job is both
+    the gate and the measured ``qtde_registros``."""
+    n = partition_count(monitored, partition_expr, dt_foto)
+    if n == 0:
         return None, failure_row(spark, banco, tabela, dt_foto, campo, formato)
-    fresh = measure_row(monitored, banco, tabela, dt_foto, partition_expr)
-    return merge_history(history, fresh), None
+    return merge_history(history, count_rows(spark, [(banco, tabela, dt_foto, n, "2")])), None
 
 
 def empty_history(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=DQ_VOLUMETRIA)
+    return local_frame(spark, [], DQ_VOLUMETRIA)
 
 
 # ---- robust anomaly flags over a volumetry history --------------------------

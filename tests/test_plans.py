@@ -37,15 +37,21 @@ def test_dup_counts_single_scan(spark):
     assert simple_plan_of(dup_counts_two_scan(df)).count("Scan parquet") == 2
 
 
-def test_merge_history_broadcasts_fresh_side(spark):
+def test_merge_history_broadcasts_fresh_side(spark, tmp_path):
     """The per-run fresh row must broadcast — the history table never
-    shuffles for the upsert."""
-    from dq import volumetry
+    shuffles for the upsert. The history is a stored table (an empty local
+    one would fold the whole merge into a LocalTableScan)."""
+    from dq import io as dqio, volumetry
+    from dq.schema import DQ_VOLUMETRIA
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    hist = volumetry.empty_history(spark)
-    fresh = volumetry.measure_row(ev, "db", "ev", "20240101", "date_format(ts,'yyyyMMdd')")
-    plan = plan_of(volumetry.merge_history(hist, fresh))
+    path = str(tmp_path / "hist")
+    volumetry.count_rows(spark, [("db", "ev", "20231231", 7, "2")]).write.parquet(path)
+    hist = dqio.read_path(spark, path, DQ_VOLUMETRIA)
+    merged, _ = volumetry.collect_volumetria(
+        spark, ev, hist, "db", "ev", "20240101", "date_format(ts,'yyyyMMdd')"
+    )
+    plan = plan_of(merged)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan
 

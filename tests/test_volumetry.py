@@ -15,7 +15,11 @@ def _events(spark):
 
 
 def test_measure_row_counts_partition(spark):
-    row = volumetry.measure_row(_events(spark), "db", "ev", "20240102", PEXPR).collect()[0]
+    hist = volumetry.empty_history(spark)
+    new_hist, _ = volumetry.collect_volumetria(
+        spark, _events(spark), hist, "db", "ev", "20240102", PEXPR
+    )
+    row = new_hist.collect()[0]
     assert row.qtde_registros == 10
     assert (row.banco, row.tabela, row.dt_foto, row.fonte) == ("db", "ev", "20240102", "2")
 
@@ -41,16 +45,14 @@ def test_gate_success_merges(spark):
 
 def test_merge_upsert_replaces_and_idempotent(spark):
     hist = volumetry.empty_history(spark)
-    fresh1 = volumetry.measure_row(_events(spark), "db", "ev", "20240101", PEXPR)
-    h1 = volumetry.merge_history(hist, fresh1)
+    h1, _ = volumetry.collect_volumetria(spark, _events(spark), hist, "db", "ev", "20240101", PEXPR)
     # re-measure same key with different source data -> replaces, not appends
     fewer = _events(spark).where(F.col("id") < 15)
-    fresh2 = volumetry.measure_row(fewer, "db", "ev", "20240101", PEXPR)
-    h2 = volumetry.merge_history(h1, fresh2)
+    h2, _ = volumetry.collect_volumetria(spark, fewer, h1, "db", "ev", "20240101", PEXPR)
     assert h2.count() == 1
     assert h2.collect()[0].qtde_registros == 5
     # idempotence: merging the same row twice == once
-    h3 = volumetry.merge_history(h2, fresh2)
+    h3, _ = volumetry.collect_volumetria(spark, fewer, h2, "db", "ev", "20240101", PEXPR)
     assert h3.collect() == h2.collect()
 
 
@@ -105,3 +107,59 @@ def test_count_anomalies_median_tiebreak_deterministic(spark):
     b = volumetry.count_anomalies(_hist(spark, pairs)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert all(r.med == 10 for r in a)
+
+
+# ---- one count job per check: same rows as the two-job formulation ----------
+
+
+def _two_job_history(spark, df, hist, dt_foto):
+    """The former path: a limit-1 gate job, then a count aggregate labeled
+    in Spark and merged into history (the oracle for the one-count path)."""
+    scoped = df.where(F.expr(PEXPR) == F.lit(dt_foto))
+    assert scoped.limit(1).count() > 0
+    fresh = scoped.agg(F.count(F.lit(1)).cast("bigint").alias("qtde_registros")).select(
+        F.lit("db").alias("banco"),
+        F.lit("ev").alias("tabela"),
+        F.lit(dt_foto).alias("dt_foto"),
+        F.date_format(F.current_date(), "yyyyMMdd").alias("dt_processamento"),
+        "qtde_registros",
+        F.lit("2").alias("fonte"),
+    )
+    return volumetry.merge_history(hist, fresh)
+
+
+def test_collect_volumetria_matches_two_job_rows(spark):
+    from dq.schema import DQ_VOLUMETRIA
+
+    ddl = "banco string, tabela string, dt_foto string, dt_processamento string, qtde_registros long, fonte string"
+    today = spark.range(1).select(F.date_format(F.current_date(), "yyyyMMdd")).first()[0]
+    hist = spark.createDataFrame(
+        [
+            ("db", "ev", "20240102", today, 99, "1"),  # same key: replaced
+            ("db", "ev", "20240102", "20240201", 98, "1"),  # earlier run: kept
+            ("db", "other", "20240101", today, 4, "1"),
+        ],
+        ddl,
+    )
+    new_hist, fail = volumetry.collect_volumetria(spark, _events(spark), hist, "db", "ev", "20240102", PEXPR)
+    want = _two_job_history(spark, _events(spark), hist, "20240102")
+    assert fail is None
+    assert new_hist.dtypes == want.dtypes == [(f.name, f.dataType.simpleString()) for f in DQ_VOLUMETRIA]
+    assert sorted(new_hist.collect()) == sorted(want.collect())
+    assert sorted((r.tabela, r.qtde_registros) for r in new_hist.collect()) == [
+        ("ev", 10),
+        ("ev", 98),
+        ("other", 4),
+    ]
+
+
+def test_collect_volumetria_missing_partition_rows(spark):
+    from dq.schema import DQ_FAILURES
+
+    hist = volumetry.empty_history(spark)
+    new_hist, fail = volumetry.collect_volumetria(
+        spark, _events(spark), hist, "db", "ev", "20991231", PEXPR, campo="ts", formato="2"
+    )
+    assert new_hist is None
+    assert fail.schema == DQ_FAILURES
+    assert [tuple(r) for r in fail.collect()] == [("db", "ev", "20991231", "ts", "2", 0)]
